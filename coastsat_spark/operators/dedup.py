@@ -11,8 +11,9 @@ Scale design:
   -> count agg. The shingle join is the classic inverted-index pattern;
   hot shingles are capped (document frequency cut) to bound skew, the
   same defense Common-Crawl dedup pipelines use;
-- MinHash: K hash functions evaluated vectorized in one pandas UDF,
-  banded into B buckets -> equi-join on (band, signature slice) so only
+- MinHash: K hash functions evaluated vectorized in one flat-buffer
+  numpy kernel (`np_minhash_from_flat` inside `mapInArrow`), banded
+  into B buckets -> equi-join on (band, signature slice) so only
   bucket-colliding pairs are compared (LSH);
 - SimHash: 64-bit fingerprint, near-dups = identical fingerprints per
   band table (hamming<=k via k-of-B band equality).
@@ -24,9 +25,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window
 
 from ..hashing import splitmix64
@@ -125,49 +126,73 @@ def token_hashes_col(text_col: str) -> "F.Column":
     return F.expr(_TOKEN_HASH_EXPR.format(col=text_col))
 
 
-def np_minhash_hashes(tok_arrays, k: int, shingle_words: int = 3, seed: int = 42) -> np.ndarray:
-    """(n_docs, k) uint64 MinHash signatures from per-doc token-hash arrays.
+def list_flat_lens(col) -> tuple[np.ndarray, np.ndarray]:
+    """(flat, lens) of an Arrow list column: every row's values back to
+    back, and each row's length. The one reader every `mapInArrow`
+    kernel over a list column uses — no per-row numpy objects.
 
-    Input: a sequence of int64/uint64 numpy arrays (one per doc, possibly
-    empty). Fully vectorized: one flat token-hash stream for the batch,
-    shingle digest = mix of `shingle_words` shifted multiplies with
-    cross-doc windows masked out, per-doc minima via np.minimum.reduceat.
-    The only per-row Python is the short-doc padding concat (rare).
-    Per-doc np.unique is skipped on purpose: min over a multiset equals
-    min over its set, so duplicate shingles cannot change a MinHash slot.
-    Docs with zero tokens keep the all-max sentinel row — callers must
-    filter them out (minhash_signatures does) so token-less docs never
-    collide with each other.
-    """
-    n = len(tok_arrays)
-    w = shingle_words
-    parts = []
-    lens = np.zeros(n, dtype=np.int64)
-    for row, a in enumerate(tok_arrays):
-        a = np.asarray(a, dtype=np.int64)
-        if a.size == 0:
-            continue
-        if a.size < w:  # pad short docs to one full window
-            a = np.concatenate([a, np.repeat(a[-1], w - a.size)])
-        parts.append(a)
-        lens[row] = a.size
-    if not parts:
-        return np.full((n, k), np.iinfo(np.uint64).max, dtype=np.uint64)
-    return _np_minhash_core(np.concatenate(parts), lens, k, w, seed)
+    A NULL row gets length 0. Arrow lets a null slot span a nonzero
+    offset extent; `flatten()` drops the values under it, so the
+    lengths zero it too via the validity bitmap, and the two are
+    checked to agree before any kernel indexes `flat` by `lens`."""
+    lens = np.diff(col.offsets.to_numpy()).astype(np.int64)
+    if col.null_count:
+        lens[col.is_null().to_numpy(zero_copy_only=False)] = 0
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if len(flat) != lens.sum():
+        raise ValueError(f"list column: {len(flat)} values for lengths summing to {lens.sum()}")
+    return flat, lens
+
+
+def _map_token_hashes(docs, text_col, id_col, out_col, out_type, kernel) -> DataFrame:
+    """`docs.select(id, token_hashes_col(text)).mapInArrow(...)`, the one
+    shape every token-hash kernel runs in: tokenize + hash stay in the
+    JVM (the text column never crosses the Arrow boundary) and each
+    batch reaches `kernel(flat, lens)` through `list_flat_lens`.
+    `kernel` returns (keep, values): a row mask (None keeps every row)
+    and the `out_col` Arrow array for the kept rows. Token-less docs are
+    filtered inside the kernel, never by a JVM `size(_th) > 0` pre-filter,
+    which runs the whole tokenize (regexp_extract_all + per-token
+    xxhash64) a second time in the scan Filter (~9 s of 24 s map-stage
+    CPU on the band-key path at sf0.1/N32). As a DataFrame transform
+    (not an expression), mapInArrow is also immune to the
+    InferFiltersFromGenerate duplication that plans an expression UDF
+    as TWO ArrowEvalPython nodes under any downstream explode."""
+    id_type = dict(docs.dtypes).get(id_col, "bigint")
+
+    def batches(it):
+        for batch in it:
+            keep, values = kernel(*list_flat_lens(batch.column(1)))
+            ids = batch.column(0) if keep is None else batch.column(0).filter(pa.array(keep))
+            if len(ids):
+                yield pa.RecordBatch.from_arrays([ids, values], names=[id_col, out_col])
+
+    return docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th")).mapInArrow(
+        batches, f"{id_col} {id_type}, {out_col} {out_type}"
+    )
 
 
 def np_minhash_from_flat(
     flat: np.ndarray, lens: np.ndarray, k: int, shingle_words: int = 3, seed: int = 42
 ) -> np.ndarray:
-    """`np_minhash_hashes` over the FLAT token-hash stream + per-doc
-    lengths (the Arrow list layout, zero object churn): pads short docs
-    with a vectorized gather instead of the per-row concat loop, then
-    runs the shared digest/slot core — bit-identical by construction."""
+    """(n_docs, k) uint64 MinHash signatures from the FLAT token-hash
+    stream + per-doc lengths (`list_flat_lens`), the only MinHash kernel.
+
+    Short docs (1 <= len < `shingle_words`) pad to one full window by
+    repeating their last token (a vectorized gather); shingle digest =
+    mix of `shingle_words` shifted multiplies with cross-doc windows
+    masked out; per-doc minima via np.minimum.reduceat. Per-doc np.unique
+    is skipped on purpose: min over a multiset equals min over its set,
+    so duplicate shingles cannot change a MinHash slot. Docs with zero
+    tokens keep the all-max sentinel row — callers must drop them
+    (minhash_signatures does) so token-less docs never collide."""
     w = shingle_words
     lens = np.asarray(lens, dtype=np.int64)
     flat = np.asarray(flat, dtype=np.int64)
+    n = len(lens)
+    out = np.full((n, k), np.iinfo(np.uint64).max, dtype=np.uint64)
     if not len(flat):
-        return np.full((len(lens), k), np.iinfo(np.uint64).max, dtype=np.uint64)
+        return out
     short = (lens > 0) & (lens < w)
     if short.any():
         out_len = np.where(short, w, lens)
@@ -180,15 +205,6 @@ def np_minhash_from_flat(
         )
         flat = flat[src]
         lens = out_len
-    return _np_minhash_core(flat, lens, k, w, seed)
-
-
-def _np_minhash_core(
-    flat: np.ndarray, lens: np.ndarray, k: int, w: int, seed: int
-) -> np.ndarray:
-    """Digest + blocked-slot core shared by both input layouts. `flat`
-    holds the padded per-doc token hashes back to back; `lens` the
-    padded lengths (0 = token-less doc, keeps the all-max sentinel)."""
     rng_idx = np.arange(k, dtype=np.uint64)
     # per-slot hash = a_i * digest + b_i mod 2^64 (a_i odd -> bijection):
     # the multiply-shift 2-universal family, the same class Spark MLlib's
@@ -200,8 +216,6 @@ def _np_minhash_core(
     # of the UDF's arithmetic, so this is the map stage's hot path.
     slot_a = splitmix64(rng_idx + np.uint64(seed * 1000 + 1)) | np.uint64(1)
     slot_b = splitmix64(rng_idx + np.uint64(seed * 1000 + 7919))
-    n = len(lens)
-    out = np.full((n, k), np.iinfo(np.uint64).max, dtype=np.uint64)
     th = flat.view(np.uint64)
     doc_of = np.repeat(np.arange(n, dtype=np.int64), lens)
     mix = splitmix64(np.arange(w, dtype=np.uint64) + np.uint64(seed * 77 + 5))
@@ -243,22 +257,19 @@ def minhash_signatures(
 ) -> DataFrame:
     """One row per doc with >=1 alnum token: (doc_id, sig array<long>).
 
-    Tokenize + token-hash run in the JVM (regexp_extract_all + xxhash64);
-    the pandas UDF receives int64 arrays only — the text column never
-    transfers to Python. Token-less docs are dropped here (they carry no
-    dedup signal and a shared sentinel signature would merge them all).
-    """
+    One `mapInArrow` over the JVM token hashes (`_map_token_hashes`).
+    Token-less and NULL-text docs are dropped inside the kernel (they
+    carry no dedup signal and a shared sentinel signature would merge
+    them all)."""
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def mh(th: pd.Series) -> pd.Series:
-        sig = np_minhash_hashes(th.to_numpy(), k, shingle_words).astype(np.int64)
-        return pd.Series(list(sig))
+    def kernel(flat, lens):
+        has = lens > 0
+        sig = np_minhash_from_flat(flat, lens, k, shingle_words)[has]
+        offs = np.arange(0, (len(sig) + 1) * k, k, dtype=np.int32)
+        values = pa.array(sig.astype(np.int64).ravel(), type=pa.int64())
+        return has, pa.ListArray.from_arrays(pa.array(offs), values)
 
-    return (
-        docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th"))
-        .filter(F.size("_th") > 0)
-        .select(F.col(id_col), mh(F.col("_th")).alias("sig"))
-    )
+    return _map_token_hashes(docs, text_col, id_col, "sig", "array<long>", kernel)
 
 
 def _band_buckets(signatures: DataFrame, k: int, bands: int, id_col: str) -> DataFrame:
@@ -351,81 +362,59 @@ def minhash_band_keys(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, bkeys array<long>): LSH band keys computed INSIDE the
-    MinHash UDF (numpy splitmix64 fold over each band's slots) — the
+    MinHash kernel (numpy splitmix64 fold over each band's slots) — the
     assignment path never materializes the k-slot signatures, cutting the
     Arrow return k/bands-fold and skipping the JVM banding pass.
 
-    Shape (r6): ONE `mapInArrow` over (id, token-hash array) — the list
-    column is consumed as its flat Arrow buffers (offsets + values, zero
-    per-row object churn; the r5 pandas_udf spent seconds per batch just
-    materializing 10k numpy objects on each side of the boundary) and
-    the band keys go back the same way. Token-less and NULL-text docs
-    get an EMPTY key array (no dedup signal; the downstream explode
-    drops them), replacing the r5 pre-filter `size(_th) > 0`, which
-    re-evaluated the whole tokenize (regexp_extract_all + per-token
-    xxhash64) a second time in the scan Filter — ~9 s of the 24 s
-    map-stage CPU at sf0.1/N32. As a DataFrame transform (not an
-    expression), mapInArrow is also immune to the
-    InferFiltersFromGenerate duplication that planned the r5 expression
-    UDF as TWO ArrowEvalPython nodes under any downstream explode."""
+    One `mapInArrow` over the JVM token hashes (`_map_token_hashes`);
+    the band keys go back as flat Arrow buffers too. Token-less and
+    NULL-text docs get an EMPTY key array (no dedup signal; the
+    downstream explode drops them)."""
     r = k // bands
     salts = splitmix64(np.arange(bands, dtype=np.uint64) + np.uint64(0xB00B5))
-    id_type = dict(docs.dtypes).get(id_col, "bigint")
 
-    def bk_batches(batches):
-        import pyarrow as pa
+    def kernel(flat, lens):
+        n = len(lens)
+        sig = np_minhash_from_flat(flat, lens, k, shingle_words)  # (n, k) uint64
+        keys = np.empty((n, bands), dtype=np.uint64)
+        for b in range(bands):
+            acc = np.full(n, salts[b], dtype=np.uint64)
+            for i in range(r):
+                acc = splitmix64(acc ^ sig[:, b * r + i])
+            keys[:, b] = acc
+        has = lens > 0
+        out_offs = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(has * bands, out=out_offs[1:])
+        values = pa.array(keys[has].astype(np.int64).ravel(), type=pa.int64())
+        return None, pa.ListArray.from_arrays(pa.array(out_offs), values)
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(1)
-            offs = col.offsets.to_numpy()
-            lens = np.diff(offs).astype(np.int64)  # NULL rows -> 0
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            sig = np_minhash_from_flat(flat, lens, k, shingle_words)  # (n, k) uint64
-            keys = np.empty((n, bands), dtype=np.uint64)
-            for b in range(bands):
-                acc = np.full(n, salts[b], dtype=np.uint64)
-                for i in range(r):
-                    acc = splitmix64(acc ^ sig[:, b * r + i])
-                keys[:, b] = acc
-            has = lens > 0
-            out_offs = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(has * bands, out=out_offs[1:])
-            values = keys[has].astype(np.int64).ravel()
-            bkeys = pa.ListArray.from_arrays(
-                pa.array(out_offs), pa.array(values, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), bkeys], names=[id_col, "bkeys"]
-            )
-
-    return docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th")).mapInArrow(
-        bk_batches, f"{id_col} {id_type}, bkeys array<long>"
-    )
+    return _map_token_hashes(docs, text_col, id_col, "bkeys", "array<long>", kernel)
 
 
-def _star_edges(raw: DataFrame, id_col: str, prepartitioned: bool = False) -> DataFrame:
+def _star_edges(raw: DataFrame, id_col: str) -> DataFrame:
     """(a, b) star edges per LSH bucket: every member points at its
     bucket's min id; singleton buckets (the vast majority) drop before
     any further work.
 
-    Shape (r6): ONE explicit repartition by bkey whose exchange is
-    written once and read by BOTH consumers (ReusedExchange) — a hash
-    aggregate building the dup-bucket table (min id + count, n>1 only)
-    and a shuffled-hash join probing it with the co-partitioned bucket
-    table (hinted; zero additional exchange because both sides carry
-    the same hashpartitioning(bkey, P)).
+    Precondition (minhash_dedup_assign meets it): `raw` (id, bkey) is
+    PERSISTED and hash-partitioned by bkey into the session's
+    shuffle-partition count. Both consumers read those cached
+    partitions — a hash aggregate building the dup-bucket table (min id
+    + count, n>1 only) and a shuffled-hash join probing it with the
+    co-partitioned bucket table (hinted; zero additional exchange
+    because both sides carry the same hashpartitioning(bkey, P)). The
+    persist is what makes the bucket exchange single-run: Spark 4.1
+    does not reuse the two structurally identical exchanges (measured:
+    both materialized).
 
     Why not the r5 entire-partition window: WindowExec pays per-GROUP
     buffer/iterator overhead, and LSH bucket keys are mostly unique —
     the r5 stage decomposition (BENCH/minhash_decomp_N16.json, sf4)
     shows the window stage at 20.8 us/row of pure CPU (192M rows ->
     4,000 s CPU, 254 s wall of a 396 s job, cpu/run 0.97), ~30x the
-    cost of hash-aggregating the same rows. The extra shuffle READ this
-    shape adds (the exchange is fetched twice) is local-disk/NIC
-    streaming of 16-byte rows — orders of magnitude cheaper than the
+    cost of hash-aggregating the same rows. The extra READ this shape
+    adds (the cached partitions are scanned twice) is local streaming
+    of 16-byte rows — orders of magnitude cheaper than the
     window's per-group CPU at any scale.
 
     Why not aggregate + plain join (the r3 shape): AQE's broadcast
@@ -434,32 +423,19 @@ def _star_edges(raw: DataFrame, id_col: str, prepartitioned: bool = False) -> Da
     table. The explicit repartition + co-partitioned SHJ makes the
     single full exchange deterministic, independent of size estimates.
 
-    `prepartitioned=True` promises the input is already
-    hash-partitioned by bkey into the session's shuffle-partition count
-    (and, when consumed more than once, persisted by the caller —
-    ReusedExchange does NOT fire for these two structurally identical
-    branches in Spark 4.1, measured: both exchanges materialized, so
-    the caller-side persist is what makes the exchange single-run).
-
     Still all-JVM: an earlier A/B against a repartition +
     sortWithinPartitions + mapInPandas formulation showed the Python
     pass scaling NEGATIVELY with cores (Arrow round-trip of the full
     bucket table contends for memory bandwidth).
     """
-    if prepartitioned:
-        r2 = raw
-    else:
-        spark = raw.sparkSession
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        r2 = raw.repartition(p, "bkey")
     dup = (
-        r2.groupBy("bkey")
+        raw.groupBy("bkey")
         .agg(F.min(id_col).alias("b"), F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > 1)
         .select("bkey", "b")
     )
     return (
-        r2.join(dup.hint("shuffle_hash"), "bkey")
+        raw.join(dup.hint("shuffle_hash"), "bkey")
         .filter(F.col(id_col) != F.col("b"))
         .select(F.col(id_col).alias("a"), "b")
         .distinct()
@@ -550,7 +526,7 @@ def minhash_dedup_assign(
         .repartition(p, "bkey")
         .persist()
     )
-    star = _star_edges(raw, id_col, prepartitioned=True).persist()
+    star = _star_edges(raw, id_col).persist()
     n_edges = star.count()
 
     if n_edges == 0:
@@ -630,19 +606,18 @@ def minhash_dedup_assign(
 
 # ---------------------------------------------------------------- SimHash
 
-def np_simhash_hashes(tok_arrays, seed: int = 42) -> np.ndarray:
-    """64-bit SimHash per doc from token-hash arrays (sign-aggregated bit
-    votes), vectorized across the whole batch: one flat token stream, one
-    (total x 64) bit matrix, per-doc vote sums via np.add.reduceat."""
-    n = len(tok_arrays)
-    out = np.zeros(n, dtype=np.uint64)
+def np_simhash_hashes(flat: np.ndarray, lens: np.ndarray, seed: int = 42) -> np.ndarray:
+    """64-bit SimHash per doc from the flat token-hash stream + per-doc
+    lengths (`list_flat_lens`; sign-aggregated bit votes), vectorized
+    across the whole batch: one (total x 64) bit matrix, per-doc vote
+    sums via np.add.reduceat. Token-less docs get 0."""
+    lens = np.asarray(lens, dtype=np.int64)
+    out = np.zeros(len(lens), dtype=np.uint64)
     bitw = np.uint64(1) << np.arange(64, dtype=np.uint64)
-    lens = np.fromiter((len(a) for a in tok_arrays), dtype=np.int64, count=n)
     nonempty = np.flatnonzero(lens)
     if nonempty.size == 0:
         return out
-    flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in tok_arrays if len(a)])
-    hs = splitmix64(flat.view(np.uint64) + np.uint64(seed))
+    hs = splitmix64(np.asarray(flat, dtype=np.int64).view(np.uint64) + np.uint64(seed))
     bits = ((hs[:, None] & bitw[None, :]) != 0).astype(np.int32)
     starts = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
     votes = 2 * np.add.reduceat(bits, starts, axis=0) - lens[nonempty, None]
@@ -651,19 +626,17 @@ def np_simhash_hashes(tok_arrays, seed: int = 42) -> np.ndarray:
 
 
 def simhash_fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, simhash) for docs with >=1 alnum token. Tokenize + hash are
-    JVM-side (see minhash_signatures); token-less docs are dropped so they
-    cannot all collide at the zero fingerprint."""
+    """(doc_id, simhash) for docs with >=1 alnum token: one `mapInArrow`
+    over the JVM token hashes (see minhash_signatures); token-less docs
+    are dropped inside the kernel so they cannot all collide at the zero
+    fingerprint."""
 
-    @F.pandas_udf(T.LongType())
-    def sh(th: pd.Series) -> pd.Series:
-        return pd.Series(np_simhash_hashes(th.to_numpy()).astype(np.int64))
+    def kernel(flat, lens):
+        has = lens > 0
+        fp = np_simhash_hashes(flat, lens)[has]
+        return has, pa.array(fp.astype(np.int64), type=pa.int64())
 
-    return (
-        docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th"))
-        .filter(F.size("_th") > 0)
-        .select(F.col(id_col), sh(F.col("_th")).alias("simhash"))
-    )
+    return _map_token_hashes(docs, text_col, id_col, "simhash", "bigint", kernel)
 
 
 def simhash_dup_pairs(
@@ -753,7 +726,7 @@ def tokhash_cte_sql(
 
 def _minhash_sig_cte_sql(k: int, shingle_words: int, seed: int) -> str:
     """CTE text from ``tokh`` to ``sig(doc_id, slot, v)`` — the MinHash
-    signature slots of np_minhash_hashes: 3-token shingle digests
+    signature slots of np_minhash_from_flat: 3-token shingle digests
     (shifted-multiply fold + splitmix64, short docs padded (t0, last,
     last)), then per-slot multiply-shift minima. Slot/mix constants are
     generated by the same hashing.splitmix64 the kernel uses."""

@@ -1,9 +1,10 @@
 """Similarity search over embedding columns (training-data pipeline).
 
-Brute-force cosine top-k is the exact baseline (pure column math via
-`aggregate`/`zip_with` — JVM-side, no Python); the scale paths are
-sign-LSH bucketing (random-hyperplane) and a centroid-probe (IVF-style)
-variant, both of which cut the candidate set before the exact rerank.
+Brute-force cosine top-k is the exact baseline (one `mapInArrow` numpy
+kernel scoring each corpus batch against the collected queries); the
+scale paths are sign-LSH bucketing (random-hyperplane) and a
+centroid-probe (IVF-style) variant, both of which cut the candidate set
+before the exact rerank.
 
 Embeddings table shape: (vec_id long, embedding array<float>, label int)
 — the driver testdata schema.
@@ -13,51 +14,32 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..hashing import splitmix64
+from .dedup import list_flat_lens
 
 
-def _dot(a: str, b: str, dim: int | None = None):
-    """Dot product of two array<float> columns.
-
-    With ``dim`` (the known embedding width) the fold is UNROLLED into a
-    plain expression chain — lit(0.0) + a[1]*b[1] + a[2]*b[2] + ... —
-    which whole-stage codegen compiles, unlike the higher-order
-    aggregate/zip_with form, which Catalyst evaluates INTERPRETED with
-    per-element lambda dispatch (measured ~20x slower per row; it
-    dominated ann_bruteforce's wall time). Bit-identical by construction:
-    the chain performs the same float multiplies and the same
-    left-to-right double additions, starting from the same 0.0 literal,
-    as aggregate(zip_with(a, b, (x,y) -> x*y), 0.0D, (s,v) -> s+v) on
-    equal-length arrays (element_at is 1-based; a ragged row yields NULL
-    either way via NULL propagation).
-    """
-    if dim is None:
-        return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (s, v) -> s + v)")
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(F.col(a), i) * F.element_at(F.col(b), i)
-    return acc
+def _dot(a: str, b: str):
+    """Dot product of two array<float> columns: float32 products folded
+    left-to-right into a float64 accumulator from 0.0 (a ragged row
+    yields NULL: zip_with pads the shorter side with NULLs)."""
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (s, v) -> s + v)")
 
 
-def _sq_norm(col: str, dim: int | None = None):
-    """Sum of squares of an array<float> column; same unrolling contract
-    (and the same IEEE operation order) as `_dot`."""
-    if dim is None:
-        return F.expr(f"aggregate({col}, 0.0D, (s, v) -> s + v * v)")
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = F.element_at(F.col(col), i)
-        acc = acc + e * e
-    return acc
+def _sq_norm(col: str):
+    """Sum of squares of an array<float> column, in `_dot`'s IEEE
+    operation order."""
+    return F.expr(f"aggregate({col}, 0.0D, (s, v) -> s + v * v)")
 
 
-def with_norm(emb: DataFrame, col: str = "embedding", dim: int | None = None) -> DataFrame:
-    return emb.withColumn("norm", F.sqrt(_sq_norm(col, dim)))
+def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
+    return emb.withColumn("norm", F.sqrt(_sq_norm(col)))
 
 
 def cosine_topk_bruteforce(
@@ -66,7 +48,6 @@ def cosine_topk_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    n_salts: int = 32,
 ) -> DataFrame:
     """Exact cosine top-k: one corpus scan scored against the collected
     query matrix inside `mapInArrow`, batch-local top-k, tiny final window.
@@ -90,20 +71,31 @@ def cosine_topk_bruteforce(
     correctly-rounded sqrt, and cosine = dot / (q_norm * c_norm) in
     float64 — the same IEEE operations in the same order. Ranking ties
     break (cosine DESC, c_id ASC) with NaN ordered first like Spark's
-    DESC NULLS LAST over doubles (NaN > +Inf); `n_salts` is kept for API
-    compatibility (the salted phase no longer exists). One documented
+    DESC NULLS LAST over doubles (NaN > +Inf). One documented
     divergence on DEGENERATE input only: a zero-norm vector made the r5
     expression RAISE under ANSI mode (DIVIDE_BY_ZERO); the kernel
     degrades to non-finite cosines ranked first instead (pytest-pinned).
+
+    Other degenerate input (pytest-pinned): NULL and empty corpus
+    embeddings carry no direction and are skipped; a corpus embedding
+    of any other width than the queries' raises ValueError naming the
+    expected width; a NULL query embedding raises ValueError on the
+    driver. q_id / c_id keep the id column types of `queries` /
+    `corpus`.
     """
+    q_type = queries.schema[id_col].dataType
+    c_type = corpus.schema[id_col].dataType
+    out_schema = f"q_id {q_type.simpleString()}, c_id {c_type.simpleString()}, cosine double"
+    q_arrow, c_arrow = to_arrow_type(q_type), to_arrow_type(c_type)
     qp = queries.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")).toPandas()
-    q_ids = qp["q_id"].to_numpy(np.int64)
+    q_ids = qp["q_id"].to_numpy()
     nq = len(q_ids)
     spark = corpus.sparkSession
     if nq == 0:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
-        )
+        return spark.createDataFrame([], out_schema + ", rank int")
+    null_q = qp["q_emb"].isna().to_numpy()
+    if null_q.any():
+        raise ValueError(f"NULL query embedding for q_id {q_ids[null_q][:5].tolist()}")
     Qf = np.vstack(qp["q_emb"].to_numpy()).astype(np.float32, copy=False)
     d = Qf.shape[1]
     # query norms once, driver-side: float32 squares folded left-to-right
@@ -115,20 +107,21 @@ def cosine_topk_bruteforce(
     qn = np.sqrt(qn2)
 
     def score_batches(batches):
-        import pyarrow as pa
-
         qrange = np.arange(nq, dtype=np.int64)
         for batch in batches:
-            n = batch.num_rows
+            flat, lens = list_flat_lens(batch.column(1))
+            rows = np.flatnonzero(lens)  # NULL / empty embeddings skipped
+            bad = lens[rows] != d
+            if bad.any():
+                raise ValueError(
+                    f"corpus embedding width {lens[rows][bad][0]}: expected width {d} "
+                    "(the query embedding width)"
+                )
+            n = len(rows)
             if n == 0:
                 continue
-            c_ids = batch.column(0).to_numpy()
-            col = batch.column(1)
-            offs = col.offsets.to_numpy()
-            Mf = col.flatten().to_numpy(zero_copy_only=False)
-            if not np.all(np.diff(offs) == d):
-                raise ValueError("ragged embedding widths in corpus batch")
-            Mf = Mf.reshape(n, d)
+            c_ids = batch.column(0).take(pa.array(rows)).to_numpy(zero_copy_only=False)
+            Mf = flat.reshape(n, d)
             acc = np.zeros((n, nq), dtype=np.float64)
             cn2 = np.zeros(n, dtype=np.float64)
             for i in range(d):
@@ -153,8 +146,8 @@ def cosine_topk_bruteforce(
             ) if len(order) else np.empty(0, dtype=np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(q_ids[qgF[take]], type=pa.int64()),
-                    pa.array(cidF[take], type=pa.int64()),
+                    pa.array(q_ids[qgF[take]], type=q_arrow),
+                    pa.array(cidF[take], type=c_arrow),
                     pa.array(cosF[take], type=pa.float64()),
                 ],
                 names=["q_id", "c_id", "cosine"],
@@ -162,7 +155,7 @@ def cosine_topk_bruteforce(
 
     cand = corpus.select(
         F.col(id_col).alias("c_id"), F.col(emb_col).alias("c_emb")
-    ).mapInArrow(score_batches, "q_id long, c_id long, cosine double")
+    ).mapInArrow(score_batches, out_schema)
     w2 = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w2))

@@ -181,14 +181,44 @@ def test_band_keys_null_and_short_docs(spark):
         assert out.loc[d, "canonical_id"] == d
 
 
-def test_np_minhash_flat_matches_legacy_layout():
-    """np_minhash_from_flat (Arrow flat buffers) must be bit-identical to
-    np_minhash_hashes (per-row arrays) across ragged lengths incl. the
-    padded short-doc cases."""
-    rng = np.random.default_rng(7)
-    lens = [0, 1, 2, 3, 4, 0, 17, 1, 2, 40, 0, 5]
-    arrays = [rng.integers(-2**62, 2**62, size=n, dtype=np.int64) for n in lens]
-    flat = np.concatenate([a for a in arrays]) if arrays else np.empty(0, np.int64)
-    legacy = dedup.np_minhash_hashes(np.array(arrays, dtype=object), 64, 3)
-    flatv = dedup.np_minhash_from_flat(flat, np.array(lens), 64, 3)
-    assert (legacy == flatv).all()
+def test_np_minhash_from_flat_padding_contract():
+    """Short docs pad to one full 3-token window by repeating their last
+    token: [t] signs like [t, t, t] and [a, b] like [a, b, b]; a
+    zero-length doc keeps the all-max sentinel row (callers drop it)."""
+    t, a, b = 11, -2**61, 2**62 + 5
+
+    def sig(*docs):
+        flat = np.array([x for d in docs for x in d], dtype=np.int64)
+        return dedup.np_minhash_from_flat(flat, np.array([len(d) for d in docs]), 64, 3)
+
+    got = sig([t], [a, b], [], [t, t, t], [a, b, b])
+    assert (got[0] == got[3]).all()
+    assert (got[1] == got[4]).all()
+    assert (got[2] == np.iinfo(np.uint64).max).all()
+    assert (got[0] != got[1]).any()
+
+
+def test_list_flat_lens_null_slot_with_extent():
+    """Arrow lets a null list slot span a nonzero offset extent, and
+    flatten() drops the values under it. The shared reader must zero that
+    row's length, so every later row still signs exactly as it does in
+    the same batch without the null."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(3)
+    docs = [rng.integers(-2**62, 2**62, size=n, dtype=np.int64) for n in (5, 4, 2, 7)]
+    junk = rng.integers(-2**62, 2**62, size=6, dtype=np.int64)
+    rows = [docs[0], junk, *docs[1:]]
+    offs = np.concatenate(([0], np.cumsum([len(r) for r in rows]))).astype(np.int32)
+    with_null = pa.ListArray.from_arrays(
+        pa.array(offs), pa.array(np.concatenate(rows)),
+        mask=pa.array([False, True, False, False, False]),
+    )
+    assert with_null.null_count == 1 and np.diff(with_null.offsets.to_numpy())[1] == 6
+    flat, lens = dedup.list_flat_lens(with_null)
+    assert lens.tolist() == [5, 0, 4, 2, 7] and len(flat) == lens.sum()
+    got = dedup.np_minhash_from_flat(flat, lens, 64, 3)
+    plain = pa.array([d.tolist() for d in docs], type=pa.list_(pa.int64()))
+    ref = dedup.np_minhash_from_flat(*dedup.list_flat_lens(plain), 64, 3)
+    assert (got[[0, 2, 3, 4]] == ref).all()
+    assert (got[1] == np.iinfo(np.uint64).max).all()

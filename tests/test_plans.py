@@ -213,7 +213,7 @@ def test_star_edges_single_bucket_exchange(spark):
         .persist()
     )
     try:
-        out = dedup._star_edges(raw, "doc_id", prepartitioned=True)
+        out = dedup._star_edges(raw, "doc_id")
         # the initial plan carries ENSURE_REQUIREMENTS bkey exchanges
         # that AQE elides once the cache stage reports its partitioning;
         # assert on the FINAL executed plan (what actually ran)
@@ -235,3 +235,21 @@ def test_star_edges_single_bucket_exchange(spark):
         assert "ArrowEvalPython" not in final, final[:2000]
     finally:
         raw.unpersist()
+
+
+@pytest.mark.parametrize("op", ["minhash_signatures", "simhash_fingerprints"])
+def test_token_hash_kernels_single_mapinarrow(spark, web, op):
+    """MinHash signatures and SimHash fingerprints run as ONE mapInArrow
+    over the JVM token hashes: no expression UDF (ArrowEvalPython), and
+    the tokenize (regexp_extract_all) evaluates exactly once — token-less
+    docs are dropped inside the kernel, not by a JVM size(_th) > 0
+    pre-filter that re-runs the whole tokenize."""
+    from coastsat_spark.operators import dedup
+
+    docs = web.select(F.xxhash64("url").alias("doc_id"), F.col("text"))
+    out = getattr(dedup, op)(docs)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert plan.count("regexp_extract_all") == 1, plan

@@ -8,7 +8,7 @@ from hypothesis import strategies as st
 
 from coastsat_spark import kernels as K
 from coastsat_spark.functions import cells
-from coastsat_spark.operators.dedup import np_minhash_hashes
+from coastsat_spark.operators.dedup import np_minhash_from_flat
 
 lat_s = st.floats(min_value=-89.999, max_value=89.999, allow_nan=False)
 lon_s = st.floats(min_value=-179.999, max_value=179.999, allow_nan=False)
@@ -89,9 +89,13 @@ def test_minhash_batch_equivariance(seed):
     order and neighbors must not matter."""
     rng = np.random.default_rng(seed)
     docs = [rng.integers(-(2**60), 2**60, rng.integers(1, 50)) for _ in range(8)]
-    full = np_minhash_hashes(docs, k=16)
+
+    def sigs(ds):
+        return np_minhash_from_flat(np.concatenate(ds), np.array([len(d) for d in ds]), k=16)
+
+    full = sigs(docs)
     perm = rng.permutation(8)
-    permuted = np_minhash_hashes([docs[i] for i in perm], k=16)
+    permuted = sigs([docs[i] for i in perm])
     assert (permuted == full[perm]).all()
-    solo = np.vstack([np_minhash_hashes([d], k=16) for d in docs])
+    solo = np.vstack([sigs([d]) for d in docs])
     assert (solo == full).all()

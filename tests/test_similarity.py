@@ -328,3 +328,63 @@ def test_bruteforce_ties_match_jvm_and_zero_norm_degrades(spark):
     ).toPandas()
     top = out.sort_values("rank").iloc[0]
     assert top["c_id"] == 2 and not math.isfinite(top["cosine"])
+
+
+def _small_emb(spark, rows, id_type=None):
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", id_type or T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+        ]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+_ROWS = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [0.9, 0.1, 0.0, 0.0]),
+    (2, [0.0, 1.0, 0.0, 0.0]),
+    (3, [0.5, 0.5, 0.5, 0.0]),
+]
+
+
+def test_bruteforce_skips_null_corpus_embeddings(spark):
+    """A NULL corpus embedding carries no direction: it is skipped, and
+    the other rows rank exactly as without it."""
+    sdf = _small_emb(spark, _ROWS)
+    with_null = _small_emb(spark, _ROWS + [(9, None)])
+    q = sdf.filter("vec_id = 0")
+    ref = similarity.cosine_topk_bruteforce(q, sdf, k=5).collect()
+    got = similarity.cosine_topk_bruteforce(q, with_null, k=5).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+    assert 9 not in {r["c_id"] for r in got}
+
+
+def test_bruteforce_ragged_corpus_width_names_expected(spark):
+    ragged = _small_emb(spark, _ROWS + [(7, [1.0, 2.0, 3.0])])
+    q = ragged.filter("vec_id = 0")
+    with pytest.raises(Exception, match="expected width 4"):
+        similarity.cosine_topk_bruteforce(q, ragged, k=5).collect()
+
+
+def test_bruteforce_null_query_embedding_raises(spark):
+    with_null = _small_emb(spark, _ROWS + [(9, None)])
+    with pytest.raises(ValueError, match=r"NULL query embedding for q_id \[9\]"):
+        similarity.cosine_topk_bruteforce(with_null.filter("vec_id >= 3"), with_null, k=5)
+
+
+def test_bruteforce_keeps_non_bigint_id_types(spark):
+    """q_id / c_id take the id column types of queries / corpus (int
+    here), not a hard-coded bigint; the ranking is unchanged."""
+    from pyspark.sql import types as T
+
+    sdf = _small_emb(spark, _ROWS, T.IntegerType())
+    out = similarity.cosine_topk_bruteforce(sdf.filter("vec_id = 0"), sdf, k=5)
+    types = dict(out.dtypes)
+    assert types["q_id"] == "int" and types["c_id"] == "int"
+    ref = similarity.cosine_topk_bruteforce(
+        _small_emb(spark, _ROWS).filter("vec_id = 0"), _small_emb(spark, _ROWS), k=5
+    )
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
