@@ -2,9 +2,10 @@
 
 The HTML->text extractor is the engine's per-row invariant surface: for
 every ``url`` the extracted ``text`` must be byte-identical to the table's
-``text`` column (BASELINE.json input_hint). Everything is a vectorized
-pandas UDF (Arrow-batched); the pure-Python/NumPy cores are importable so
-the pytest oracle exercises the same code on collected data.
+``text`` column (BASELINE.json input_hint). The extractor and the geotag
+parse are JVM expressions (`extract_text`, `tiling.with_geo`); the
+pure-Python forms (`extract_text_bytes`, `parse_geotag_bytes`) are the
+byte-level references the tests compare them against.
 
 Analysis operators (language-ID, quality scoring, token counting, rolling
 fingerprints) are the training-data-pipeline additions the engine provides
@@ -25,7 +26,6 @@ from pyspark.sql import types as T
 
 _ARTICLE_RE = re.compile(rb"<article>(.*?)</article>", re.DOTALL)
 _GEO_RE = re.compile(rb'<meta name="geo" content="(-?\d+\.\d+);(-?\d+\.\d+)"')
-_TS_RE = re.compile(rb'<meta name="warc-ts" content="([^"]+)"')
 _TAG_RE = re.compile(rb"<[^>]+>")
 
 # BPE-ish tokenizer: words, numbers, or single non-space symbols
@@ -62,14 +62,6 @@ def parse_geotag_bytes(html: bytes) -> tuple[float, float]:
     return (float(m.group(1)), float(m.group(2)))
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_arrow(html: pd.Series) -> pd.Series:
-    """Arrow-batched Python extractor (the r5 hot path). Kept as the
-    byte-level reference for the parity test and for non-UTF-8 corpora;
-    `extract_text` (all-JVM) is the corpus-scale path since r6."""
-    return html.map(extract_text_bytes)
-
-
 def extract_text(html) -> "F.Column":
     """HTML -> article text as a pure JVM expression (no Python, no
     Arrow transfer of the html payload — it stayed the biggest single
@@ -96,17 +88,6 @@ def extract_text(html) -> "F.Column":
         F.regexp_replace(s, "<[^>]+>", " "), r"^\s+|\s+$", ""
     )
     return F.when(has, article).otherwise(stripped)
-
-
-_GEO_SCHEMA = T.StructType(
-    [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
-)
-
-
-@F.pandas_udf(_GEO_SCHEMA)
-def parse_geotag(html: pd.Series) -> pd.DataFrame:
-    vals = html.map(parse_geotag_bytes)
-    return pd.DataFrame({"lat": [v[0] for v in vals], "lon": [v[1] for v in vals]})
 
 
 # ---------------------------------------------------------------- tokens

@@ -18,9 +18,9 @@ statistics the next one sees), so it runs over that bounded table in
 NumPy-grade Python — the same bounded-model-fit pattern as
 `classify.train_nn_model` and `dedup._driver_connected_components`;
 corpus text never reaches the driver. Encoding re-uses the bound the
-other way: each DISTINCT word is encoded exactly once (Python sees
-vocab-sized data), then a BROADCAST join maps the exploded corpus
-word stream to token ids — the corpus-sized path is all JVM.
+other way: only the model (merges + token->id dict) is broadcast, and
+one shuffle-free mapInPandas pass encodes each batch through a per-task
+memo cache, so each distinct word is encoded about once per task.
 
 No reference analog (CoastSat has no text layer); extends the
 LLM-pipeline family (`selection.py`, `packing.py`, `dedup.py`).
@@ -155,94 +155,25 @@ def bpe_encode(
     vocab: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    via: str = "map",
 ) -> DataFrame:
     """Encode a corpus with learned merges: (doc_id, n_tokens,
     token_ids array<long>), token stream in document order, out-of-vocab
     characters (unseen at train time) dropped with their word's
     remaining symbols kept.
 
-    Two physical strategies, identical output (parity-tested):
-
-    `via='map'` (default): one mapInPandas pass over the documents —
-    the merges and the token->id dict (both MODEL-sized: chars +
-    n_merges entries, NOT corpus-derived) ship to executors via a real
+    One mapInPandas pass over the documents: the merges and the
+    token->id dict (both MODEL-sized: chars + n_merges entries, NOT
+    corpus-derived) ship to executors via a real
     `sparkContext.broadcast`; each Arrow batch splits words with the
     same regex and encodes through a per-task memo cache (Zipf word
     re-use makes the cache hit rate ~= 1 - distinct/total). ZERO
     shuffles, zero corpus-derived broadcast, embarrassingly parallel —
-    the plan you want at 100 TB and the one that scales N->4N
-    (the join strategy measured 0.43 efficiency at sf1 because its
-    driver-side broadcast build of the corpus-derived word table and
-    its two corpus shuffles do not parallelize;
+    the plan you want at 100 TB and the one that scales N->4N (a
+    distinct-word broadcast-join form measured 0.43 efficiency at sf1
+    because its driver-side broadcast build of the corpus-derived word
+    table and its two corpus shuffles do not parallelize;
     BENCH/pipeline_ops_scaling.json).
-
-    `via='join'`: the Python encoder runs once per DISTINCT word (a
-    pandas UDF over the vocab-bounded distinct-word table); the
-    corpus-sized path is explode -> BROADCAST join on word ->
-    re-assemble per doc. Keeps corpus text out of Python entirely at
-    the price of two corpus shuffles; useful when documents are huge
-    and the distinct-word table is tiny relative to the corpus.
     """
-    if via == "map":
-        return _bpe_encode_map(docs, merges, vocab, text_col, id_col)
-    if via != "join":
-        raise ValueError("via must be 'map' or 'join'")
-    from pyspark.sql.functions import pandas_udf
-
-    merge_list = [tuple(p) for p in merges]
-
-    @pandas_udf("array<string>")
-    def encode_word(words: pd.Series) -> pd.Series:
-        return words.map(lambda w: bpe_encode_word(w, merge_list))
-
-    t = F.coalesce(F.col(text_col) if isinstance(text_col, str) else text_col, F.lit(""))
-    exploded = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.posexplode_outer(F.regexp_extract_all(t, F.lit(_NWS_RE), F.lit(0))).alias(
-            "pos", "word"
-        ),
-    )
-    # distinct words only ever reach Python; symbols map to ids via the
-    # broadcast vocab (unseen symbols -> dropped by the inner join)
-    word_syms = (
-        exploded.select("word").where(F.col("word").isNotNull()).distinct()
-        .select("word", F.posexplode(encode_word("word")).alias("sym_pos", "token"))
-        .join(F.broadcast(vocab), "token", "inner")
-        .groupBy("word")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("sym_pos", "token_id"))
-            ).alias("_s")
-        )
-        .select("word", F.col("_s.token_id").alias("ids"))
-    )
-    empty = F.expr("CAST(array() AS array<bigint>)")
-    return (
-        exploded.join(F.broadcast(word_syms), "word", "left")
-        # NULL ids = a word with every symbol out-of-vocab, or the
-        # posexplode_outer row of a token-less doc — contributes nothing
-        .select("doc_id", "pos", F.coalesce("ids", empty).alias("ids"))
-        .groupBy("doc_id")
-        .agg(
-            F.flatten(
-                F.array_sort(F.collect_list(F.struct("pos", "ids")))["ids"]
-            ).alias("token_ids")
-        )
-        .select("doc_id", F.size("token_ids").alias("n_tokens"), "token_ids")
-    )
-
-
-def _bpe_encode_map(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    vocab: DataFrame,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Shuffle-free encode: mapInPandas with a per-task memo cache.
-    Only the MODEL (merges + token->id dict, bounded by n_merges) is
-    broadcast; corpus text flows straight through Arrow batches."""
     import re
 
     merge_list = [tuple(p) for p in merges]

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..datagen import COAST_AMP, COAST_WAVELEN
 from ..functions import cells
-from ..functions.text import parse_geotag
 
 BANDS = ["blue", "green", "red", "nir", "swir"]
 
@@ -61,9 +60,8 @@ def _noise(lat_i, lon_i, p: int, q: int):
     ) - F.lit(0.5)
 
 
-_GEO_JVM_RE = r'<meta name="geo" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
-# single-capture variant: grab "lat;lon" in ONE regex pass and split on
-# ';' afterwards. The two-group form needed two regexp_extract calls
+# single capture: grab "lat;lon" in ONE regex pass and split on ';'
+# afterwards. A two-group form needed two regexp_extract calls
 # (group 1 + group 2) which are DIFFERENT expressions to Catalyst, so
 # codegen's common-subexpression elimination could not merge them and
 # the regex ran twice per row; the pair+split form runs the regex once
@@ -71,26 +69,23 @@ _GEO_JVM_RE = r'<meta name="geo" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
 _GEO_JVM_RE_PAIR = r'<meta name="geo" content="(-?\d+\.\d+;-?\d+\.\d+)"'
 
 
-def with_geo(docs: DataFrame, jvm: bool = True) -> DataFrame:
+def with_geo(docs: DataFrame) -> DataFrame:
     """Parse the html geotag into lat/lon columns.
 
-    Default path is pure JVM: the geo meta sits in the document head, so
+    Pure JVM: the geo meta sits in the document head, so
     `regexp_extract` over the first bytes cast to string stays inside
     whole-stage codegen — NO Python on the ingestion hot path at all.
-    `jvm=False` uses the Arrow pandas UDF (general fallback; the parity
-    test asserts both paths agree byte-for-byte on the corpus).
+    `functions.text.parse_geotag_bytes` is the pure-Python reference the
+    parity test compares against.
     """
-    if jvm:
-        head = F.substring(F.col("html"), 1, 160).cast("string")
-        pair = F.regexp_extract(head, _GEO_JVM_RE_PAIR, 1)
-        parts = F.split(pair, ";")
-        # lat/lon strings cannot contain ';' (pattern is digits/dot/sign),
-        # so splitting the joint capture is exactly the two-group parse
-        return docs.withColumn(
-            "lat", F.when(pair != "", parts.getItem(0).cast("double"))
-        ).withColumn("lon", F.when(pair != "", parts.getItem(1).cast("double")))
-    g = parse_geotag(F.col("html"))
-    return docs.withColumn("_g", g).select("*", "_g.lat", "_g.lon").drop("_g")
+    head = F.substring(F.col("html"), 1, 160).cast("string")
+    pair = F.regexp_extract(head, _GEO_JVM_RE_PAIR, 1)
+    parts = F.split(pair, ";")
+    # lat/lon strings cannot contain ';' (pattern is digits/dot/sign),
+    # so splitting the joint capture is exactly the two-group parse
+    return docs.withColumn(
+        "lat", F.when(pair != "", parts.getItem(0).cast("double"))
+    ).withColumn("lon", F.when(pair != "", parts.getItem(1).cast("double")))
 
 
 def with_bands(docs: DataFrame) -> DataFrame:

@@ -165,7 +165,7 @@ def unigram_encode(
 
     Single shuffle-free mapInPandas pass; only the model (piece ->
     (id, logp)) is broadcast. Same scale shape as
-    `bpe.bpe_encode(via='map')`, including the per-task memo cache."""
+    `bpe.bpe_encode`, including the per-task memo cache."""
     import re
 
     model = {

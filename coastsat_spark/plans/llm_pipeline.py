@@ -120,7 +120,7 @@ def curate_corpus(
         merges, vocab = bpe_ops.bpe_train(
             sample, n_merges=n_merges, max_words=max_train_words
         )
-        tokens = bpe_ops.bpe_encode(kept, merges, vocab, via="map")
+        tokens = bpe_ops.bpe_encode(kept, merges, vocab)
     else:
         from ..operators import unigram as uni_ops
 
@@ -299,7 +299,7 @@ def curate_corpus_staged(
 
     tokens, lin5 = L.run_with_lineage(
         spark, "curate_tokens", model_fp,
-        lambda: bpe_ops.bpe_encode(kept, merges, vocab, via="map"),
+        lambda: bpe_ops.bpe_encode(kept, merges, vocab),
         key_col="doc_id", **kw,
     )
     contexts, lin6 = L.run_with_lineage(

@@ -90,57 +90,43 @@ def test_encode_oov_chars_dropped(docs, spark):
     assert [inv[i] for i in enc.loc[1, "token_ids"]] == ["</w>"]
 
 
-def test_encode_strategies_agree(docs, spark):
-    """via='map' (shuffle-free mapInPandas) and via='join' (distinct-word
-    broadcast join) must produce identical token streams — including
-    empty/None docs and OOV-heavy words."""
+def test_encode_matches_reference(docs, spark):
+    """The mapInPandas encoder must equal the pure-Python reference —
+    bpe_encode_word over the _NWS_RE words, mapped through the vocab with
+    unseen symbols dropped — including empty/None docs and OOV-heavy
+    words."""
     merges, vocab = bpe.bpe_train(docs, n_merges=6)
-    probe = spark.createDataFrame(
-        [(0, "low π∆ low"), (1, "πππ"), (2, ""), (3, None), (4, "the widest newest")],
-        "doc_id long, text string",
-    )
-    for src in (docs, probe):
-        m = bpe.bpe_encode(src, merges, vocab, via="map").toPandas()
-        j = bpe.bpe_encode(src, merges, vocab, via="join").toPandas()
-        m = m.sort_values("doc_id").reset_index(drop=True)
-        j = j.sort_values("doc_id").reset_index(drop=True)
-        assert list(m["doc_id"]) == list(j["doc_id"])
-        assert list(m["n_tokens"]) == list(j["n_tokens"])
-        assert [list(a) for a in m["token_ids"]] == [list(a) for a in j["token_ids"]]
+    tid = {r["token"]: r["token_id"] for r in vocab.collect()}
+    probe = [(0, "low π∆ low"), (1, "πππ"), (2, ""), (3, None), (4, "the widest newest")]
+    for rows in (CORPUS, probe):
+        src = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r["doc_id"]: (r["n_tokens"], list(r["token_ids"]))
+            for r in bpe.bpe_encode(src, merges, vocab).collect()
+        }
+        want = {}
+        for doc_id, text in rows:
+            ids = [
+                tid[sym]
+                for w in re.findall(bpe._NWS_RE, text or "")
+                for sym in bpe.bpe_encode_word(w, merges)
+                if sym in tid
+            ]
+            want[doc_id] = (len(ids), ids)
+        assert got == want
 
 
 def test_encode_map_plan_is_shuffle_free(docs):
-    """The default strategy must be a single mapInPandas pass: no
+    """The encoder must be a single mapInPandas pass: no
     Exchange, no join — the property that makes it scale N->4N."""
     merges, vocab = bpe.bpe_train(docs, n_merges=4)
-    df = bpe.bpe_encode(docs, merges, vocab, via="map")
+    df = bpe.bpe_encode(docs, merges, vocab)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "MapInPandas" in plan
-
-
-def test_encode_plan_shape(docs):
-    """Corpus-sized joins are broadcast, and the only Python evaluation
-    sits above the distinct-word aggregate (vocab-bounded), never on the
-    exploded corpus stream."""
-    merges, vocab = bpe.bpe_train(docs, n_merges=4)
-    df = bpe.bpe_encode(docs, merges, vocab, via="join")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exactly one Arrow-batched Python eval node (the per-distinct-word
-    # encoder) — formatted explain prints each node twice (tree + detail)
-    assert plan.count("ArrowEvalPython") == 2
-    # it is fed by the distinct-word HashAggregate, not the raw scan: the
-    # explain lists children before parents, so the aggregate precedes it
-    agg_first = re.search(r"HashAggregate", plan)
-    py = re.search(r"ArrowEvalPython", plan)
-    assert agg_first and py and agg_first.start() < py.start()
 
 
 def test_word_counts_cap_is_deterministic(spark):

@@ -97,10 +97,22 @@ def test_jvm_extract_text_corpus_roundtrip(spark):
 
 def test_with_geo_single_regex_parity(spark):
     """r6: the JVM geotag parse runs ONE regex (pair capture + split);
-    it must agree with the Arrow/Python path byte-for-byte."""
+    it must agree with the pure-Python reference byte-for-byte, on the
+    corpus and on html with no (or a malformed) geotag or no html."""
     from coastsat_spark.operators import tiling
 
-    web = webpages_df(spark, 3000)
-    a = tiling.with_geo(web, jvm=True).select("url", "lat", "lon").orderBy("url").collect()
-    b = tiling.with_geo(web, jvm=False).select("url", "lat", "lon").orderBy("url").collect()
-    assert a == b
+    edge = spark.createDataFrame(
+        [
+            ("edge/0", b"<html><head></head><article>x</article></html>"),
+            ("edge/1", b'<meta name="geo" content="12;34">'),
+            ("edge/2", b'<meta name="geo" content="-1.5;2.25"><article>y</article>'),
+            ("edge/3", None),
+        ],
+        "url string, html binary",
+    )
+    web = webpages_df(spark, 3000).select("url", "html").unionByName(edge)
+    rows = tiling.with_geo(web).select("html", "lat", "lon").collect()
+    assert len(rows) == 3004
+    for r in rows:
+        html = bytes(r["html"]) if r["html"] is not None else None
+        assert (r["lat"], r["lon"]) == parse_geotag_bytes(html), html

@@ -40,34 +40,6 @@ def triad_gbps(n: int = 20_000_000) -> float:
     return (3 * 8 * n / dt) / 1e9
 
 
-def ambient_quiet(thr: float, samples: int = 3, pause: float = 2.0) -> bool:
-    """True when the median of `samples` triad probes exceeds `thr`
-    GB/s — THE quiet-window gate (r4_windows / r4_perf_suite import it
-    so 'quiet' means the same thing in every round-4 artifact)."""
-    vals = []
-    for i in range(samples):
-        if i:
-            time.sleep(pause)
-        vals.append(triad_gbps(8_000_000))
-    med = sorted(vals)[len(vals) // 2]
-    print(f"ambient median {med:.3f} GB/s (thr {thr})", flush=True)
-    return med > thr
-
-
-def run_logged(cmd: list[str], log: str, timeout: int = 5400) -> int:
-    """Run `[sys.executable] + cmd` from the repo root, tee-ing output to
-    `log` (shared subprocess wrapper for the window/suite collectors)."""
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(log, "w") as f:
-        return subprocess.run(
-            [_sys.executable] + cmd, stdout=f, stderr=subprocess.STDOUT,
-            timeout=timeout, cwd=repo,
-        ).returncode
-
-
 def int_loop_mips(n: int = 5_000_000) -> float:
     t0 = time.perf_counter()
     x = 0

@@ -13,18 +13,18 @@ extract_shorelines' execution shape) twice on the same input:
   on : key = adaptive_tiles(...)  (hot cells re-keyed 1-4 levels finer,
        the quad-split defense of operators/tiling.py:229)
 
-and records, from the Spark REST API, the kernel stage's PER-TASK
-durations + shuffle-read record counts: max/median and p99/median task
-time, plus the partition row-count spread. Done-criterion from the
-round-4 verdict: with the split ON, p99 task time within ~2x median on
-the skewed world. The reference analog is the 100 km^2 GEE tile cap
-(README.md:157) — a size bound on any one unit of work.
+and records, from the in-process status store (tools/stage_report.py),
+the kernel stage's PER-TASK durations + shuffle-read record counts:
+max/median and p99/median task time, plus the partition row-count
+spread. Done-criterion from the round-4 verdict: with the split ON, p99
+task time within ~2x median on the skewed world. The reference analog
+is the 100 km^2 GEE tile cap (README.md:157) — a size bound on any one
+unit of work.
 
-Ambient DRAM bandwidth is sampled throughout (shared-host honesty; see
-BENCH/noise_log.jsonl). Caveat on reading it: the sampler thread
-competes with Spark's own 16-32 worker threads, so DURING a stage it
-reads the job's self-contention (~0.01 GB/s), not the co-tenant; only
-samples taken between jobs reflect ambient noise.
+Ambient DRAM bandwidth is sampled once before and once after the two
+variants (shared-host honesty; see BENCH/noise_log.jsonl). A probe
+taken DURING a stage would compete with Spark's own worker threads and
+read the job's self-contention, not the co-tenant.
 
 Usage: python tools/skew_study.py [sf] [cpus] [base_res] [out_json]
 Writes BENCH/skew_study_sf{sf}.json (also printed).
@@ -36,7 +36,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,30 +46,8 @@ from coastsat_spark.datagen import ensure_webpages
 from coastsat_spark.functions import cells
 from coastsat_spark.operators import tiling
 from coastsat_spark.session import get_spark
-from tools.minhash_decomp import AmbientSampler, rest_stages
-
-
-def task_metrics(spark, stage_id: int, attempt: int = 0) -> list[dict]:
-    """Per-task duration + shuffle-read records for one stage."""
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = (
-        f"{ui}/api/v1/applications/{app_id}/stages/{stage_id}/{attempt}"
-        f"/taskList?length=10000"
-    )
-    with urllib.request.urlopen(url, timeout=30) as r:
-        tasks = json.loads(r.read())
-    out = []
-    for t in tasks:
-        tm = t.get("taskMetrics") or {}
-        sr = tm.get("shuffleReadMetrics") or {}
-        out.append(
-            {
-                "duration_s": (t.get("duration") or 0) / 1e3,
-                "records": int(sr.get("recordsRead") or 0),
-            }
-        )
-    return out
+from tools.noise_probe import triad_gbps
+from tools.stage_report import stage_rows, task_rows
 
 
 def _kernel(batches):
@@ -119,20 +96,19 @@ def run_variant(
     rep = keyed.repartition(rep_n, "atile").sortWithinPartitions("atile")
     job = rep.mapInPandas(_kernel, schema="n long, acc double")
 
-    before = {s["stageId"] for s in rest_stages(spark)}
+    sc = spark.sparkContext
+    group = f"skew_study/{'on' if adaptive else 'off'}"
+    sc.setJobGroup(group, "scene-group shuffle + kernel")
     t0 = time.perf_counter()
     total_rows = job.agg(F.sum("n")).collect()[0][0]
     wall = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
 
-    # the kernel stage is the one with shuffle-read tasks completed after
-    # `before` (the repartition exchange's reducer side)
-    stages = [
-        s
-        for s in rest_stages(spark)
-        if s["stageId"] not in before and s.get("shuffleReadBytes", 0) > 0
-    ]
-    stages.sort(key=lambda s: s.get("shuffleReadBytes", 0), reverse=True)
-    tasks = task_metrics(spark, stages[0]["stageId"]) if stages else []
+    # the kernel stage is the group's stage that reads the most shuffle
+    # bytes (the repartition exchange's reducer side)
+    stages = [s for s in stage_rows(sc, group) if s["shuffle_read_bytes"] > 0]
+    stages.sort(key=lambda s: s["shuffle_read_bytes"], reverse=True)
+    tasks = task_rows(sc, stages[0]["stage"], stages[0]["attempt"]) if stages else []
     # quantiles over NON-EMPTY tasks: rep_n > #keys means many reducers
     # own zero keys and finish instantly — including them would flatter
     # the median and inflate every ratio
@@ -211,7 +187,6 @@ def main() -> None:
         shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "true",  # REST task metrics
             # per-reducer tasks must stay 1:1 with shuffle partitions —
             # coalescing would merge small partitions and hide the
             # hot-task / median contrast this study exists to measure
@@ -245,15 +220,14 @@ def main() -> None:
         "cast(id as double) as lat", "'0' as atile"
     ).mapInPandas(_kernel, schema="n long, acc double").agg(F.sum("n")).collect()
 
-    amb = AmbientSampler()
-    amb.start()
+    triad_before = triad_gbps(8_000_000)
     off = run_variant(
         spark, geo, adaptive=False, base_res=base_res, cap=cap, rep_n=rep_n
     )
     on = run_variant(
         spark, geo, adaptive=True, base_res=base_res, cap=cap, rep_n=rep_n
     )
-    amb.stop()
+    triad_after = triad_gbps(8_000_000)
 
     out = {
         "sf": sf,
@@ -265,11 +239,7 @@ def main() -> None:
         "off": off,
         "on": on,
         "speedup_on_vs_off": round(off["wall_s"] / max(on["wall_s"], 1e-9), 2),
-        "ambient_triad_gbps": {
-            "min": min(amb.samples) if amb.samples else None,
-            "median": round(float(np.median(amb.samples)), 3) if amb.samples else None,
-            "max": max(amb.samples) if amb.samples else None,
-        },
+        "triad_gbps": {"before": round(triad_before, 3), "after": round(triad_after, 3)},
     }
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
     with open(out_path, "w") as f:
