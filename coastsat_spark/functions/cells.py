@@ -122,6 +122,22 @@ def np_fine_to_tile_pixel(lat, lon, tile_res: int = TILE_RES, grid_log2: int = G
 
 # ------------------------------------------------------------- spark side
 
+def sql_lit(v: "int | float") -> str:
+    """A Python number as Spark SQL text, typed exactly as `F.lit` types
+    it: a float is a DOUBLE (`0.5D`; a bare `0.5` would parse as DECIMAL
+    and change the arithmetic), an int an INT, or a BIGINT (`...L`) past
+    the int32 range; a negative value is parenthesized. Operators that
+    build their row-local math as one `F.expr` per column (one JVM round
+    trip instead of one per operator) embed their constants through this,
+    so the SQL text plans to the same typed expression tree as the
+    `Column` API."""
+    if isinstance(v, float):
+        s = f"{v!r}D"
+    else:
+        s = str(v) if -(1 << 31) <= v < (1 << 31) else f"{v}L"
+    return f"({s})" if v < 0 else s
+
+
 def xy_cols(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
     n = 1 << res
     x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long")

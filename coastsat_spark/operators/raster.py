@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .. import kernels
 from ..functions import cells
+from ..functions.cells import sql_lit
 from .tiling import BANDS
 
 
@@ -82,25 +83,32 @@ def scene_quality(pixels: DataFrame, s: ShorelineSettings) -> DataFrame:
     """Per-scene cloud/nodata stats + keep flag (gates F2/F3/F7).
 
     Exposed as its own operator so the gate is a relational filter *before*
-    the Python stage (cheap-filter-first staging, SURVEY.md §4.1).
+    the Python stage (cheap-filter-first staging, SURVEY.md §4.1). Each
+    aggregate and gate is one SQL-text expression with `sql_lit`-typed
+    constants (one JVM round trip each, the `Column` API's tree).
     """
     g = 1 << s.grid_log2
     total_px = g * g
-    clear = F.col("cloud_frac") <= s.cloud_mask_frac
-    mndwi = (F.col("swir") - F.col("green")) / (F.col("swir") + F.col("green"))
+    cut = sql_lit(s.cloud_mask_frac)
+    clear_mndwi = f"cloud_frac <= {cut} AND (swir - green) / (swir + green)"
     st = pixels.groupBy("tile", "scene_month").agg(
-        F.count(F.lit(1)).alias("filled_px"),
-        F.sum((F.col("cloud_frac") > s.cloud_mask_frac).cast("int")).alias("cloud_px"),
-        F.sum("n_docs").alias("n_docs"),
-        F.sum((clear & (mndwi < s.water_cut)).cast("int")).alias("water_px"),
-        F.sum((clear & (mndwi > s.land_cut)).cast("int")).alias("land_px"),
+        F.expr("count(1) AS filled_px"),
+        F.expr(f"sum(cast(cloud_frac > {cut} as int)) AS cloud_px"),
+        F.expr("sum(n_docs) AS n_docs"),
+        F.expr(f"sum(cast({clear_mndwi} < {sql_lit(s.water_cut)} as int)) AS water_px"),
+        F.expr(f"sum(cast({clear_mndwi} > {sql_lit(s.land_cut)} as int)) AS land_px"),
     )
-    filled_frac = F.col("filled_px") / F.lit(float(total_px))
-    cloud_frac = F.col("cloud_px") / F.col("filled_px")
-    combined_bad = (F.col("cloud_px") + F.lit(total_px) - F.col("filled_px")) / F.lit(
-        float(total_px)
+    filled_frac = f"filled_px / {sql_lit(float(total_px))}"
+    cloud_frac = "cloud_px / filled_px"
+    combined_bad = f"(cloud_px + {sql_lit(total_px)} - filled_px) / {sql_lit(float(total_px))}"
+    keep = (
+        f"{filled_frac} >= {sql_lit(s.min_filled_frac)}"
+        f" AND {cloud_frac} <= {sql_lit(s.max_cloud_frac)}"
+        f" AND {combined_bad} <= {sql_lit(s.max_cloud_frac_combined)}"
+        f" AND water_px >= {sql_lit(s.min_water_px)}"
+        f" AND land_px >= {sql_lit(s.min_land_px)}"
     )
-    return st.select(
+    return st.selectExpr(
         "tile",
         "scene_month",
         "filled_px",
@@ -108,16 +116,10 @@ def scene_quality(pixels: DataFrame, s: ShorelineSettings) -> DataFrame:
         "n_docs",
         "water_px",
         "land_px",
-        filled_frac.alias("filled_frac"),
-        cloud_frac.alias("cloud_frac"),
-        combined_bad.alias("combined_bad_frac"),
-        (
-            (filled_frac >= s.min_filled_frac)
-            & (cloud_frac <= s.max_cloud_frac)
-            & (combined_bad <= s.max_cloud_frac_combined)
-            & (F.col("water_px") >= s.min_water_px)
-            & (F.col("land_px") >= s.min_land_px)
-        ).alias("keep"),
+        f"{filled_frac} AS filled_frac",
+        f"{cloud_frac} AS cloud_frac",
+        f"{combined_bad} AS combined_bad_frac",
+        f"{keep} AS keep",
     )
 
 
@@ -153,52 +155,43 @@ def with_halo(
     g = 1 << grid_log2
     # bitwise decode (float division would lose precision at 2^60-scale
     # ids); tile res is read from the id itself so the operator works at
-    # any tiling resolution
-    res = F.shiftright(F.col("tile"), cells.R_BITS)
-    # SQL shiftleft accepts a column shift count (the DataFrame helper
-    # only takes a literal)
-    n = F.expr(f"shiftleft(1L, cast(shiftright(tile, {cells.R_BITS}) as int))")
-    x = F.shiftright(F.col("tile"), cells.X_BITS) % F.lit(1 << cells.X_BITS)
-    y = F.col("tile") % F.lit(1 << cells.X_BITS)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
+    # any tiling resolution. SQL shiftleft accepts a column shift count.
+    # Every column is one SQL-text expression (one JVM round trip each).
+    res = f"shiftright(tile, {cells.R_BITS})"
+    n = f"shiftleft(1L, cast({res} as int))"
+    x = f"(shiftright(tile, {cells.X_BITS}) % {sql_lit(1 << cells.X_BITS)})"
+    y = f"(tile % {sql_lit(1 << cells.X_BITS)})"
+    offsets = ", ".join(
+        f"named_struct('dx', {sql_lit(dx)}, 'dy', {sql_lit(dy)})"
+        for dx in (-1, 0, 1)
+        for dy in (-1, 0, 1)
     )
-
-    def _emits(o):
-        # identity (dx=dy=0) passes UNCONDITIONALLY — original rows are
-        # never touched (tile ids outside the cell encoding, e.g. ad-hoc
-        # test tiles, survive byte-identical, like the old union's core
-        # branch); ghost copies additionally require landing on the
-        # neighbor's [-1, g] ring and a valid (clamped) tile row
-        frow = F.col("px_row") - o.dy * F.lit(g)
-        fcol = F.col("px_col") - o.dx * F.lit(g)
-        ny = y + o.dy
-        return ((o.dx == 0) & (o.dy == 0)) | (
-            frow.between(-1, g)
-            & fcol.between(-1, g)
-            & (ny >= 0)
-            & (ny < n)  # lat clamps; lon wraps via pmod below
-        )
-
-    ident = (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)
-    out_cols = pixels.columns
+    # identity (dx=dy=0) passes UNCONDITIONALLY — original rows are never
+    # touched (tile ids outside the cell encoding, e.g. ad-hoc test tiles,
+    # survive byte-identical); ghost copies additionally require landing
+    # on the neighbor's [-1, g] ring and a valid tile row (lat clamps;
+    # lon wraps via pmod below)
+    frow = f"px_row - o.dy * {g}"
+    fcol = f"px_col - o.dx * {g}"
+    emits = (
+        f"o -> (o.dx = 0 AND o.dy = 0) OR ("
+        f"{frow} >= -1 AND {frow} <= {g} AND {fcol} >= -1 AND {fcol} <= {g}"
+        f" AND {y} + o.dy >= 0 AND {y} + o.dy < {n})"
+    )
+    tile = (
+        f"CASE WHEN _o.dx = 0 AND _o.dy = 0 THEN tile ELSE {res} * {sql_lit(1 << cells.R_BITS)}"
+        f" + pmod({x} + _o.dx, {n}) * {sql_lit(1 << cells.X_BITS)} + ({y} + _o.dy) END"
+    )
     return (
-        pixels.withColumn("_o", F.explode(F.filter(offsets, _emits)))
-        .withColumn("px_row", F.col("px_row") - F.col("_o.dy") * F.lit(g))
-        .withColumn("px_col", F.col("px_col") - F.col("_o.dx") * F.lit(g))
-        .withColumn(
-            "tile",
-            F.when(ident, F.col("tile")).otherwise(
-                res * F.lit(1 << cells.R_BITS)
-                + F.pmod(x + F.col("_o.dx"), n) * F.lit(1 << cells.X_BITS)
-                + (y + F.col("_o.dy"))
-            ),
+        pixels.withColumn("_o", F.expr(f"explode(filter(array({offsets}), {emits}))"))
+        .withColumns(
+            {
+                "px_row": F.expr(f"px_row - _o.dy * {g}"),
+                "px_col": F.expr(f"px_col - _o.dx * {g}"),
+                "tile": F.expr(tile),
+            }
         )
-        .select(*out_cols)
+        .drop("_o")
     )
 
 
@@ -209,6 +202,27 @@ def _shoreline_schema(pixels: DataFrame) -> str:
     return (
         f"tile long, scene_month {mt}, contour_id int, point_idx int, "
         "px_x double, px_y double, lon double, lat double, t_mndwi double"
+    )
+
+
+def _no_points(pdf: pd.DataFrame) -> pd.DataFrame:
+    """`scene_extract_pdf`'s zero-row result (scene_month keeps the input's
+    dtype), built only at the return sites that need it."""
+    return pd.DataFrame(
+        {
+            k: pd.Series(dtype=t)
+            for k, t in [
+                ("tile", "int64"),
+                ("scene_month", pdf["scene_month"].dtype),
+                ("contour_id", "int32"),
+                ("point_idx", "int32"),
+                ("px_x", "float64"),
+                ("px_y", "float64"),
+                ("lon", "float64"),
+                ("lat", "float64"),
+                ("t_mndwi", "float64"),
+            ]
+        }
     )
 
 
@@ -255,30 +269,13 @@ def scene_extract_pdf(
     cloudm[r[cl] + 1, c[cl] + 1] = True
     is_core = (r >= 0) & (r < g) & (c >= 0) & (c < g)
 
-    empty = pd.DataFrame(
-        {
-            k: pd.Series(dtype=t)
-            for k, t in [
-                ("tile", "int64"),
-                ("scene_month", pdf["scene_month"].dtype),
-                ("contour_id", "int32"),
-                ("point_idx", "int32"),
-                ("px_x", "float64"),
-                ("px_y", "float64"),
-                ("lon", "float64"),
-                ("lat", "float64"),
-                ("t_mndwi", "float64"),
-            ]
-        }
-    )
-
     # scene gates on CORE pixels only (redundant with scene_quality
     # filter; cheap safety) — halo rows never change a tile's gates
     n_filled = int(filled[core].sum())
     if n_filled == 0 or n_filled / (g * g) < s.min_filled_frac:
-        return empty
+        return _no_points(pdf)
     if cloudm[core].sum() / max(n_filled, 1) > s.max_cloud_frac:
-        return empty
+        return _no_points(pdf)
 
     mndwi = (grid[:, :, 1] - grid[:, :, 0]) / (grid[:, :, 1] + grid[:, :, 0])
     mndwi[cloudm | ~filled] = np.nan
@@ -297,7 +294,7 @@ def scene_extract_pdf(
 
     vals = mndwi[core][np.isfinite(mndwi[core])]
     if (vals < s.water_cut).sum() < s.min_water_px or (vals > s.land_cut).sum() < s.min_land_px:
-        return empty
+        return _no_points(pdf)
 
     # SDS_shoreline.py:195-202: >= min_sand_px classified sand pixels in
     # the (buffered) scene -> class-refined Otsu (find_wl_contours2 path),
@@ -319,7 +316,7 @@ def scene_extract_pdf(
     if not np.isfinite(t):
         t = kernels.otsu_threshold(vals)
     if not np.isfinite(t):
-        return empty
+        return _no_points(pdf)
 
     contours = kernels.marching_squares(mndwi, t)
 
@@ -386,7 +383,7 @@ def scene_extract_pdf(
         idxs.append(np.arange(len(pts), dtype=np.int64))
         cid += 1
     if not kept:
-        return empty
+        return _no_points(pdf)
     allpts = np.concatenate(kept)
     # pixel -> world affine: pixel centers at (index + 0.5)
     return pd.DataFrame(
@@ -612,6 +609,45 @@ def pansharpen_oracle_tail_sql(
       )"""
 
 
+def _scene_groups(
+    pixels: DataFrame,
+    s: ShorelineSettings,
+    quality: DataFrame | None = None,
+    halo: bool = True,
+) -> DataFrame:
+    """The contour kernel's input: pixel rows (plus halo ghosts) hash
+    partitioned and sorted on (tile, scene_month), holding only groups
+    that can yield points."""
+    if quality is not None:
+        keep = quality.filter("keep").select("tile", "scene_month")
+        pixels = pixels.join(keep, ["tile", "scene_month"], "left_semi")
+    if halo:
+        pixels = with_halo(pixels, grid_log2=s.grid_log2)
+    # deliberately the coalescible (no pinned count) repartition form:
+    # an r6 A/B that pinned spark.sql.shuffle.partitions here doubled
+    # the stage's summed task time (per-task Python dispatch overhead,
+    # 16 -> 32 tasks) with NO wall gain — at sf0.1 this stage is bound
+    # by per-task fixed cost, not parallelism, so AQE's coalescing is
+    # the right call and scales with data volume at larger sf.
+    rep = pixels.repartition("tile", "scene_month").sortWithinPartitions(
+        "tile", "scene_month"
+    )
+    if not halo:
+        return rep
+    # ghosts also land in tiles with no pixels of their own in the scene
+    # (a gated-out or empty neighbor). Such a group holds only ring rows,
+    # so filled[core] is 0 and the kernel can only return empty: drop it
+    # JVM-side, before the Python boundary. The window reuses the
+    # repartition's clustering and sort (no extra exchange or sort).
+    g = 1 << s.grid_log2
+    core = f"px_row >= 0 AND px_row < {g} AND px_col >= 0 AND px_col < {g}"
+    return (
+        rep.withColumn("_core", F.expr(f"max({core}) OVER (PARTITION BY tile, scene_month)"))
+        .filter("_core")
+        .drop("_core")
+    )
+
+
 def extract_shorelines(
     pixels: DataFrame,
     s: ShorelineSettings | None = None,
@@ -638,24 +674,23 @@ def extract_shorelines(
     `sparkContext.broadcast` so each executor receives it once (closure
     capture would re-serialize it into every task).
 
-    Execution shape: the naive `groupBy(k).applyInPandas` pays one Arrow
-    record batch + one Python call per (tile, scene) group (~5 ms/group
-    measured on 8x8 grids — the marching-squares kernel itself is nearly
-    free, so per-group framing dominated the stage). This runs the SAME
-    hash shuffle (repartition on the key) but loops over groups INSIDE a
-    mapInPandas UDF: rows arrive key-sorted within the partition, each
-    ~10k-row Arrow batch is sliced at key boundaries with one numpy
-    flatnonzero, and only the possibly-incomplete trailing group is
-    carried to the next batch — bounded memory (one group + one batch),
-    identical output, 19-31% faster on the isolated stage at N16.
+    Execution shape: one hash shuffle on the scene key, then a
+    mapInPandas UDF that loops over groups: rows arrive key-sorted
+    within the partition, each ~10k-row Arrow batch is sliced at key
+    boundaries with one numpy flatnonzero, and only the possibly
+    incomplete trailing group is carried to the next batch (bounded
+    memory: one group + one batch). The stage's cost was Python work
+    that produced nothing, not Arrow framing: on the 30,000-doc
+    benchmark input (seed 0) 835 groups reached the kernel, 634 of them
+    holding only halo ghosts of kept neighbors, and every call built its
+    empty result frame up front. Dropping ghost-only groups in the JVM
+    (`_scene_groups`) and building the empty frame only where it is
+    returned took the isolated stage from 1.83 s to 1.01 s (local[2]).
+    With only live groups left, a `mapInArrow` identity pass over this
+    input runs within 0.05 s of a `mapInPandas` one (0.51 s vs 0.55 s),
+    so the framing is not the lever at this scale.
     """
     s = s or ShorelineSettings()
-    if quality is not None:
-        keep = quality.filter(F.col("keep")).select("tile", "scene_month")
-        pixels = pixels.join(keep, ["tile", "scene_month"], "left_semi")
-    if halo:
-        pixels = with_halo(pixels, grid_log2=s.grid_log2)
-
     ref_bc = None
     if reference is not None and s.max_dist_ref is not None:
         ref_map = {
@@ -706,16 +741,8 @@ def extract_shorelines(
         if out:
             yield pd.concat(out, ignore_index=True)
 
-    # deliberately the coalescible (no pinned count) repartition form:
-    # an r6 A/B that pinned spark.sql.shuffle.partitions here doubled
-    # the stage's summed task time (per-task Python dispatch overhead,
-    # 16 -> 32 tasks) with NO wall gain — at sf0.1 this stage is bound
-    # by per-task fixed cost, not parallelism, so AQE's coalescing is
-    # the right call and scales with data volume at larger sf.
-    rep = pixels.repartition("tile", "scene_month").sortWithinPartitions(
-        "tile", "scene_month"
-    )
-    return rep.mapInPandas(map_fn, schema=_shoreline_schema(pixels))
+    groups = _scene_groups(pixels, s, quality, halo)
+    return groups.mapInPandas(map_fn, schema=_shoreline_schema(groups))
 
 
 def crossings_oracle_sql(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..datagen import COAST_AMP, COAST_WAVELEN
 from ..functions import cells
+from ..functions.cells import sql_lit
 
 BANDS = ["blue", "green", "red", "nir", "swir"]
 
@@ -49,15 +50,10 @@ CLOUD_FRAC = 0.06
 _NOISE_MOD = 9973
 
 
-def coast_lat_col(lon):
-    return F.lit(COAST_AMP) * F.sin(lon * F.lit(2.0 * math.pi / COAST_WAVELEN))
-
-
-def _noise(lat_i, lon_i, p: int, q: int):
+def _noise_sql(lat_i: str, lon_i: str, p: int, q: int) -> str:
     """Deterministic noise in [-0.5, 0.5) from quantized geotag digits."""
-    return F.pmod(lat_i * F.lit(p) + lon_i * F.lit(q), F.lit(_NOISE_MOD)) / F.lit(
-        float(_NOISE_MOD)
-    ) - F.lit(0.5)
+    m = _NOISE_MOD
+    return f"(pmod({lat_i} * {p} + {lon_i} * {q}, {m}) / {sql_lit(float(m))} - 0.5D)"
 
 
 # single capture: grab "lat;lon" in ONE regex pass and split on ';'
@@ -89,54 +85,52 @@ def with_geo(docs: DataFrame) -> DataFrame:
 
 
 def with_bands(docs: DataFrame) -> DataFrame:
-    """Materialize the five band values + cloud flag as column arithmetic."""
-    lat_i = F.round(F.col("lat") * 1e6).cast("long")
-    lon_i = F.round(F.col("lon") * 1e6).cast("long")
-    water = (F.col("lat") < coast_lat_col(F.col("lon"))).cast("double")
-    cloud = (
-        _noise(lat_i, lon_i, _CLOUD_P, _CLOUD_Q) + F.lit(0.5) < F.lit(CLOUD_FRAC)
-    ).alias("cloud")
-    out = docs.withColumn("cloud", cloud)
-    for b, (p, q, base, wd, amp) in _BAND_MODEL.items():
-        clear_val = F.lit(base) + water * F.lit(wd) + _noise(lat_i, lon_i, p, q) * F.lit(
-            2.0 * amp
+    """Materialize the five band values + cloud flag as column arithmetic.
+
+    Each output column is one SQL-text `F.expr` with `sql_lit`-typed
+    constants: the same expression tree the `Column` API makes, in one
+    JVM round trip per column instead of one per operator."""
+    lat_i = "cast(round(lat * 1000000.0D) as bigint)"
+    lon_i = "cast(round(lon * 1000000.0D) as bigint)"
+    freq = sql_lit(2.0 * math.pi / COAST_WAVELEN)
+    water = f"cast(lat < {sql_lit(COAST_AMP)} * sin(lon * {freq}) as double)"
+    cloud = f"{_noise_sql(lat_i, lon_i, _CLOUD_P, _CLOUD_Q)} + 0.5D < {sql_lit(CLOUD_FRAC)}"
+    bands = {
+        b: F.expr(
+            f"CASE WHEN cloud THEN 250.0D ELSE {sql_lit(base)} + {water} * {sql_lit(wd)}"
+            f" + {_noise_sql(lat_i, lon_i, p, q)} * {sql_lit(2.0 * amp)} END"
         )
-        out = out.withColumn(b, F.when(F.col("cloud"), F.lit(250.0)).otherwise(clear_val))
-    return out
+        for b, (p, q, base, wd, amp) in _BAND_MODEL.items()
+    }
+    return docs.withColumn("cloud", F.expr(cloud)).withColumns(bands)
 
 
 def with_tiles(
     docs: DataFrame, tile_res: int = cells.TILE_RES, grid_log2: int = cells.GRID_LOG2
 ) -> DataFrame:
     """Tile + in-tile pixel assignment via one shared fine-resolution floor
-    (grid-aligned snap, analog of adjust_polygon SDS_download.py:770-809)."""
+    (grid-aligned snap, analog of adjust_polygon SDS_download.py:770-809).
+    One SQL-text `F.expr` per output column, like `with_bands`."""
     n_fine = 1 << (tile_res + grid_log2)
-    xf = F.least(
-        F.greatest(
-            F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0) * F.lit(n_fine)).cast("long"),
-            F.lit(0),
-        ),
-        F.lit(n_fine - 1),
-    )
-    yf = F.least(
-        F.greatest(
-            F.floor((F.lit(90.0) - F.col("lat")) / F.lit(180.0) * F.lit(n_fine)).cast("long"),
-            F.lit(0),
-        ),
-        F.lit(n_fine - 1),
-    )
+
+    def fine(frac: str) -> str:
+        n = sql_lit(n_fine)
+        return f"least(greatest(cast(floor({frac} * {n}) as bigint), 0), {sql_lit(n_fine - 1)})"
+
+    xf = fine("(lon + 180.0D) / 360.0D")
+    yf = fine("(90.0D - lat) / 180.0D")
     g = (1 << grid_log2) - 1
-    tx = F.shiftright(xf, grid_log2)
-    ty = F.shiftright(yf, grid_log2)
     tile = (
-        F.lit(tile_res) * F.lit(1 << cells.R_BITS)
-        + tx * F.lit(1 << cells.X_BITS)
-        + ty
+        f"{sql_lit(tile_res)} * {sql_lit(1 << cells.R_BITS)}"
+        f" + shiftright({xf}, {grid_log2}) * {sql_lit(1 << cells.X_BITS)}"
+        f" + shiftright({yf}, {grid_log2})"
     )
-    return (
-        docs.withColumn("tile", tile)
-        .withColumn("px_row", yf.bitwiseAND(F.lit(g)).cast("int"))
-        .withColumn("px_col", xf.bitwiseAND(F.lit(g)).cast("int"))
+    return docs.withColumns(
+        {
+            "tile": F.expr(tile),
+            "px_row": F.expr(f"cast(({yf}) & {g} as int)"),
+            "px_col": F.expr(f"cast(({xf}) & {g} as int)"),
+        }
     )
 
 

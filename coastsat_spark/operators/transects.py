@@ -31,6 +31,7 @@ from pyspark.sql import Window as W
 
 from ..datagen import COAST_AMP, COAST_WAVELEN, LON_MAX, LON_MIN, coast_lat
 from ..functions import cells
+from ..functions.cells import sql_lit
 
 # engine-world (degrees) defaults; the reference's metre defaults
 # (along_dist=25m, origin 1000m, example.py:214-220) scale to our pixel
@@ -69,26 +70,33 @@ def transects_df(spark: SparkSession, n: int = 41) -> DataFrame:
     return spark.createDataFrame(make_transects_pdf(n))
 
 
-def _pair_geometry(points: DataFrame, transects: DataFrame) -> DataFrame:
-    """Broadcast cross join + shore-normal frame geometry columns.
+def _with_geometry(j: DataFrame) -> DataFrame:
+    """Shore-normal frame geometry columns of (point, transect) rows.
 
     d_line: distance to the infinite transect line (cross-product formula,
     SDS_transects.py:213-216); d_origin: distance to origin; chainage:
-    coordinate along the transect direction (rotated x, :233-238).
+    coordinate along the transect direction (rotated x, :233-238). One
+    SQL-text expression per column (one JVM round trip each).
     """
-    j = points.crossJoin(F.broadcast(transects))
-    dx = F.col("lon") - F.col("x0")
-    dy = F.col("lat") - F.col("y0")
-    tx = F.col("x1") - F.col("x0")
-    ty = F.col("y1") - F.col("y0")
-    tlen = F.sqrt(tx * tx + ty * ty)
-    return (
-        j.withColumn("d_line", F.abs(tx * dy - ty * dx) / tlen)
-        .withColumn("d_origin", F.sqrt(dx * dx + dy * dy))
-        .withColumn("chainage", (dx * tx + dy * ty) / tlen)
-        .withColumn("phi", F.atan2(ty, tx))
-        .withColumn("phi_sl", F.atan2(dy, dx))
+    dx, dy, tx, ty = "(lon - x0)", "(lat - y0)", "(x1 - x0)", "(y1 - y0)"
+    tlen = f"sqrt({tx} * {tx} + {ty} * {ty})"
+    return j.withColumns(
+        {
+            "d_line": F.expr(f"abs({tx} * {dy} - {ty} * {dx}) / {tlen}"),
+            "d_origin": F.expr(f"sqrt({dx} * {dx} + {dy} * {dy})"),
+            "chainage": F.expr(f"({dx} * {tx} + {dy} * {ty}) / {tlen}"),
+            "phi": F.expr(f"atan2({ty}, {tx})"),
+            "phi_sl": F.expr(f"atan2({dy}, {dx})"),
+        }
     )
+
+
+def _refine(j: DataFrame, along_dist: float, max_dist_origin: float, use_bearing: bool) -> DataFrame:
+    """The J1/J2 match predicates over `_with_geometry` rows."""
+    cond = f"d_line <= {sql_lit(along_dist)} AND d_origin <= {sql_lit(max_dist_origin)}"
+    if use_bearing:
+        cond += f" AND abs(phi - phi_sl) < {sql_lit(math.pi / 2.0)}"
+    return j.filter(cond).drop("phi", "phi_sl")
 
 
 def transect_join(
@@ -98,17 +106,15 @@ def transect_join(
     max_dist_origin: float = MAX_DIST_ORIGIN,
     use_bearing: bool = True,
 ) -> DataFrame:
-    """J1: matched (point, transect) pairs with chainage.
+    """J1: matched (point, transect) pairs with chainage, over a broadcast
+    cross join.
 
     With use_bearing=True this is `compute_intersection`'s predicate set
     (raw |phi - phi_sl| < pi/2, SDS_transects.py:220-227); False gives the
     QC variant's predicate set (J2, :318-322).
     """
-    j = _pair_geometry(points, transects)
-    cond = (F.col("d_line") <= along_dist) & (F.col("d_origin") <= max_dist_origin)
-    if use_bearing:
-        cond = cond & (F.abs(F.col("phi") - F.col("phi_sl")) < math.pi / 2.0)
-    return j.filter(cond).drop("phi", "phi_sl")
+    j = _with_geometry(points.crossJoin(F.broadcast(transects)))
+    return _refine(j, along_dist, max_dist_origin, use_bearing)
 
 
 def median_intersections(pairs: DataFrame, time_col: str = "scene_month") -> DataFrame:
@@ -244,19 +250,4 @@ def transect_join_cells(
     cand = pts.join(F.broadcast(cover), "cell").drop("cell")
     tr = transects.withColumnRenamed("transect", "_t")
     j = cand.join(F.broadcast(tr), cand["transect"] == tr["_t"]).drop("_t")
-    dx = F.col("lon") - F.col("x0")
-    dy = F.col("lat") - F.col("y0")
-    tx = F.col("x1") - F.col("x0")
-    ty = F.col("y1") - F.col("y0")
-    tlen = F.sqrt(tx * tx + ty * ty)
-    j = (
-        j.withColumn("d_line", F.abs(tx * dy - ty * dx) / tlen)
-        .withColumn("d_origin", F.sqrt(dx * dx + dy * dy))
-        .withColumn("chainage", (dx * tx + dy * ty) / tlen)
-        .withColumn("phi", F.atan2(ty, tx))
-        .withColumn("phi_sl", F.atan2(dy, dx))
-    )
-    cond = (F.col("d_line") <= along_dist) & (F.col("d_origin") <= max_dist_origin)
-    if use_bearing:
-        cond = cond & (F.abs(F.col("phi") - F.col("phi_sl")) < math.pi / 2.0)
-    return j.filter(cond).drop("phi", "phi_sl")
+    return _refine(_with_geometry(j), along_dist, max_dist_origin, use_bearing)

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the `coastsat_spark` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "coastsat_spark",
@@ -44,6 +47,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # Python workers import this package from their PYTHONPATH, not
+        # the driver's sys.path: without this a driver started outside the
+        # package's parent directory fails in its first Python task
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # Library default keeps Spark's disk-backed local dirs (a tmpfs
     # default would let large spills exhaust RAM, and cluster managers

@@ -170,3 +170,15 @@ def test_z_order_spark_matches_numpy_and_nests(spark):
         idx = order[c : c + 50]
         spans.append((lon[idx].max() - lon[idx].min()) + (lat[idx].max() - lat[idx].min()))
     assert np.median(spans) < 0.5 * (360.0 + 180.0)
+
+
+def test_sql_lit_types_like_f_lit(spark):
+    """`sql_lit` text parses to a literal of the type `F.lit` gives the
+    same Python number (a bare `0.5` would be DECIMAL in Spark SQL)."""
+    vals = [0.5, -0.2, 1e6, 7, -1, (1 << 31) - 1, 1 << 31, 1 << cells.R_BITS]
+    got = spark.range(1).select(
+        *[F.expr(cells.sql_lit(v)).alias(f"c{i}") for i, v in enumerate(vals)]
+    )
+    want = spark.range(1).select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(vals)])
+    assert got.dtypes == want.dtypes
+    assert got.first() == want.first()

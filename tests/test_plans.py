@@ -253,3 +253,21 @@ def test_token_hash_kernels_single_mapinarrow(spark, web, op):
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan, plan
     assert plan.count("regexp_extract_all") == 1, plan
+
+
+def test_flagship_build_runs_no_jobs(spark, web):
+    """Building the flagship plan is lazy: no Spark job starts until an
+    action runs (`run_flagship` returns DataFrames only)."""
+    from coastsat_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    group = "test_flagship_build"
+    sc.setJobGroup(group, "run_flagship build")
+    try:
+        res = pipeline.run_flagship(spark, web)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        res.pixels.unpersist()

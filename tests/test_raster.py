@@ -3,6 +3,7 @@ geometric sanity of extracted shorelines (FIXTURES.md §6)."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from coastsat_spark import kernels
 from coastsat_spark.datagen import coast_lat, gen_batch, webpages_df
@@ -416,3 +417,113 @@ def test_with_halo_wraps_lon_and_clamps_lat(spark):
     w = ghosts.iloc[0]
     assert w["tile"] == west  # lon wrapped to x = n-1
     assert w["px_col"] == g and w["px_row"] == 0  # our col 0 = west's col-g ghost
+
+
+def test_gated_neighbor_ghosts_never_reach_kernel(spark):
+    """Tile A is kept, its east neighbor B is gated out (all water: no
+    land pixels). A's ghosts land in B's group and B's pixels would ghost
+    into A: only A's group reaches the kernel, and the output equals the
+    pandas halo mirror run over the kept scenes alone."""
+    res = cells.TILE_RES
+    A = res * (1 << cells.R_BITS) + 10 * (1 << cells.X_BITS) + 20
+    B = res * (1 << cells.R_BITS) + 11 * (1 << cells.X_BITS) + 20
+    water_a = {(r, c) for r in range(4) for c in range(8)}  # top half water
+    water_b = {(r, c) for r in range(8) for c in range(8)}
+    pdf = _two_tile_px(water_a, water_b)
+    sdf = spark.createDataFrame(pdf)
+    s = raster.ShorelineSettings()
+    q = raster.scene_quality(sdf, s)
+    keep = q.filter("keep").select("tile", "scene_month").toPandas()
+    assert keep["tile"].tolist() == [A]
+
+    groups = raster._scene_groups(sdf, s, q).select("tile", "scene_month").distinct()
+    assert [r["tile"] for r in groups.collect()] == [A]
+
+    got = _norm(raster.extract_shorelines(sdf, s, quality=q).toPandas())
+    kept_px = pdf.merge(keep, on=["tile", "scene_month"])
+    exp = _norm(
+        pd.concat(
+            [
+                raster.scene_extract_pdf(grp.reset_index(drop=True), s)
+                for _, grp in _halo_pdf(kept_px, 8).groupby(["tile", "scene_month"])
+            ],
+            ignore_index=True,
+        )
+    )
+    assert len(got) > 0 and len(got) == len(exp)
+    assert (got["tile"] == A).all()
+    for col in ("contour_id", "point_idx"):
+        assert (got[col].to_numpy() == exp[col].to_numpy()).all(), col
+    for col in ("px_x", "px_y", "lon", "lat", "t_mndwi"):
+        assert np.allclose(got[col].to_numpy(), exp[col].to_numpy(), atol=1e-9), col
+    # B's border column ghosts into A's east ring (px_col == 8) only
+    # without the gate
+    def east_ring_rows(quality):
+        rows = raster._scene_groups(sdf, s, quality).filter(f"tile = {A} AND px_col = 8")
+        return rows.count()
+
+    assert east_ring_rows(q) == 0
+    assert east_ring_rows(None) == 8
+
+
+@pytest.mark.parametrize(
+    "month", [pd.Timestamp("2022-01-01"), 202201], ids=["timestamp", "bigint"]
+)
+def test_scene_extract_pdf_empty_result_schema(month):
+    """A group the kernel cannot contour (here: only halo ring rows, so
+    no core pixel) returns the 9-column empty frame, with scene_month in
+    the input's dtype."""
+    pdf = pd.DataFrame(
+        {
+            "tile": np.full(3, 7, dtype=np.int64),
+            "scene_month": [month] * 3,
+            "px_row": [-1, 8, 3],
+            "px_col": [2, 2, -1],
+            "green": [100.0] * 3,
+            "swir": [50.0] * 3,
+            "n_docs": np.ones(3, dtype=np.int64),
+            "cloud_frac": [0.0] * 3,
+        }
+    )
+    out = raster.scene_extract_pdf(pdf, raster.ShorelineSettings())
+    assert len(out) == 0
+    assert list(out.dtypes.items()) == [
+        ("tile", np.dtype("int64")),
+        ("scene_month", pdf["scene_month"].dtype),
+        ("contour_id", np.dtype("int32")),
+        ("point_idx", np.dtype("int32")),
+        ("px_x", np.dtype("float64")),
+        ("px_y", np.dtype("float64")),
+        ("lon", np.dtype("float64")),
+        ("lat", np.dtype("float64")),
+        ("t_mndwi", np.dtype("float64")),
+    ]
+
+
+def _digest(df) -> tuple[int, int]:
+    from pyspark.sql import functions as F
+
+    row = df.select(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+    ).first()
+    return int(row[0]), int(row[1] or 0)
+
+
+def test_prepare_and_halo_same_under_ansi_on_and_off(spark):
+    """The SQL-text band, tile and halo expressions evaluate to the same
+    rows with ANSI mode on and off (no overflow or cast that one mode
+    raises on and the other wraps)."""
+    docs = webpages_df(spark, 6_000)
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    got = {}
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set(key, mode)
+            prepared = tiling.prepare_documents(docs).drop("html")
+            halo = raster.with_halo(raster.aggregate_pixels(prepared))
+            got[mode] = (_digest(prepared), _digest(halo))
+    finally:
+        spark.conf.set(key, old)
+    assert got["true"] == got["false"]
+    assert got["true"][0][0] == 6_000

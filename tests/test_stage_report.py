@@ -53,3 +53,11 @@ def test_task_rows_one_per_task(spark, stage_report, grouped_rows):
     assert len(tasks) == reduce_stage["tasks"]
     # the 13 grouping keys' partial aggregates from the 4 map tasks
     assert sum(t["records"] for t in tasks) == 4 * 13
+
+
+def test_session_points_python_workers_at_the_package(spark):
+    """Python workers import `coastsat_spark` from the PYTHONPATH that
+    get_spark sets, so a tool started outside the repo root still runs
+    its Python tasks."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.executorEnv.PYTHONPATH") == REPO

@@ -46,6 +46,7 @@ from coastsat_spark.datagen import ensure_webpages
 from coastsat_spark.functions import cells
 from coastsat_spark.operators import tiling
 from coastsat_spark.session import get_spark
+from perfbench.workloads import CAP_AT_180K
 from tools.noise_probe import triad_gbps
 from tools.stage_report import stage_rows, task_rows
 
@@ -209,7 +210,9 @@ def main() -> None:
         .persist()
     )
     n = geo.count()
-    cap = max(50_000, n // (8 * cpus))
+    # the hot cap scales with the input and has no floor, so hot cells
+    # split at any sf (a 50,000 floor kept every cell whole below ~130k docs)
+    cap = max(1, round(CAP_AT_180K * n / 180_000))
     rep_n = 8 * cpus
 
     # warm the Python worker pool before the first timed variant: the
